@@ -5,18 +5,29 @@
 epoch → hiveperiod/datetime_wita, source filename) → partitioned snappy
 parquet append. ``repair_misfiled`` finishes what the reference's
 data-cleaner starts (SURVEY §3.4) and ``compact_partitions`` implements the
-stubbed daily compactor (datalog_compacter.py:1-26) — both via dynamic
-partition overwrite, fixing the reference's duplicate-on-repair gap (old
-files were never deleted).
+stubbed daily compactor (datalog_compacter.py:1-26). This module decides
+WHAT to write; how the lake is written — the writer chain, dynamic
+partition overwrite and the deletion of partitions a rewrite leaves empty
+(the reference's duplicate-on-repair gap: old files were never deleted) —
+lives in ``sources.lake`` (``write_lake`` / ``replace_partitions``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from enterprise_iot_bigdata_pipeline_spark.functions.epoch import normalize_epoch_auto, to_local
-from enterprise_iot_bigdata_pipeline_spark.sources.lake import PARTITION_COLS, write_lake
+from enterprise_iot_bigdata_pipeline_spark.functions.epoch import (
+    derive_hiveperiod,
+    normalize_epoch_auto,
+    to_local,
+)
+from enterprise_iot_bigdata_pipeline_spark.sources.lake import (
+    PARTITION_COLS,
+    replace_partitions,
+    table_partition_cols,
+    write_lake,
+)
 from enterprise_iot_bigdata_pipeline_spark.sources.ndjson import read_ndjson
 
 
@@ -85,22 +96,23 @@ def compact_batch(
     return n
 
 
+def _misfiled(accurate: Column) -> Column:
+    """Null-safe misfiled predicate for a row whose event-time date is
+    ``accurate``: a row stored in the NULL partition
+    (__HIVE_DEFAULT_PARTITION__) with a valid heartbeat IS misfiled —
+    plain != evaluates to NULL there and silently hides it. Rows whose
+    accurate date can't be computed (null heartbeat) are not misfiled:
+    there is no correct partition to move them to."""
+    return ~F.col("hiveperiod").eqNullSafe(accurate) & accurate.isNotNull()
+
+
 def audit_misfiled(lake: DataFrame, tz_hours: int = 8) -> DataFrame:
     """Rows whose stored partition date ≠ true event-time date — the
     reference's production invariant (data-cleaner.py:109-117). Returns
     DISTINCT (hiveperiod, dstrct_code, accurate_wita_date) to repair."""
-    accurate = to_local(normalize_epoch_auto(F.col("heartbeat")), tz_hours).cast("date")
     return (
-        lake.withColumn("accurate_wita_date", accurate)
-        # null-safe: a row stored in the NULL partition
-        # (__HIVE_DEFAULT_PARTITION__) with a valid heartbeat IS misfiled
-        # — plain != evaluates to NULL there and silently hides it. Rows
-        # whose accurate date can't be computed (null heartbeat) are not
-        # misfiled: there is no correct partition to move them to.
-        .filter(
-            ~F.col("hiveperiod").eqNullSafe(F.col("accurate_wita_date"))
-            & F.col("accurate_wita_date").isNotNull()
-        )
+        lake.withColumn("accurate_wita_date", derive_hiveperiod(F.col("heartbeat"), tz_hours))
+        .filter(_misfiled(F.col("accurate_wita_date")))
         .select("hiveperiod", "dstrct_code", "accurate_wita_date")
         .distinct()
     )
@@ -109,21 +121,15 @@ def audit_misfiled(lake: DataFrame, tz_hours: int = 8) -> DataFrame:
 def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
     """Rewrite misfiled rows into their correct partitions.
 
-    Unlike the reference (append-only, leaves stale copies), this uses
-    dynamic partition overwrite. The rewrite set is the union of source
-    (bad) and target (accurate-date) partitions: dynamic overwrite replaces
-    every partition present in the output, so the target partitions must be
-    read and rewritten too or their pre-existing correct rows would be
-    dropped. One pass is closed under movement — every misfiled row's
-    current partition is by definition a bad period, so no row can move to
-    a partition outside bad ∪ target.
-
-    Dynamic overwrite only replaces partitions PRESENT in the output, so a
-    partition whose rows were ALL misfiled — zero rows left after
-    recomputation — would silently survive with its stale files. Those
-    emptied source partitions are deleted explicitly after the write
-    (bad-partition set minus the write's output-partition set), through
-    the Hadoop FileSystem API so the path works on HDFS/S3A too.
+    Unlike the reference (append-only, leaves stale copies), this replaces
+    partitions (``replace_partitions``). The rewrite set is the union of
+    source (bad) and target (accurate-date) partitions: dynamic overwrite
+    replaces every partition present in the output, so the target
+    partitions must be read and rewritten too or their pre-existing correct
+    rows would be dropped. One pass is closed under movement — every
+    misfiled row's current partition is by definition a bad period, so no
+    row can move to a partition outside bad ∪ target. A bad partition
+    whose rows were ALL misfiled is left empty by the rewrite and deleted.
 
     Partition columns are DERIVED from the table's directory layout
     (round-2 advice): an epoch-partitioned streaming target
@@ -138,52 +144,35 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
             f"repair_misfiled: lake at {root} has partition layout {pcols} "
             "without a hiveperiod level — nothing to repair by event date"
         )
-    other_cols = [c for c in pcols if c != "hiveperiod"]
     lake = spark.read.parquet(root)
-    accurate = to_local(normalize_epoch_auto(F.col("heartbeat")), tz_hours).cast("date")
+    accurate = derive_hiveperiod(F.col("heartbeat"), tz_hours)
     affected = (
-        lake.withColumn("accurate", accurate)
-        # null-safe misfiled predicate — see audit_misfiled
-        .filter(
-            ~F.col("hiveperiod").eqNullSafe(F.col("accurate"))
-            & F.col("accurate").isNotNull()
-        )
-        .select(
-            F.col("hiveperiod").alias("bad_period"),
-            *[F.col(c).alias(f"bad_{c}") for c in other_cols],
-            F.col("accurate").alias("target_period"),
-        )
+        lake.withColumn("target_period", accurate)
+        .filter(_misfiled(F.col("target_period")))
+        .select(*pcols, "target_period")
         .distinct()
     )
     moves = affected.collect()  # partition list: tiny, control plane
     if not moves:
         return 0
 
-    # bad_parts through the SAME Spark cast-to-string domain as out_parts
-    # (partition_values_set) — a parallel Python str() path would compare
-    # different string formats for bool/float/null partition values and
-    # the set difference would silently miss dirs to delete. The frame is
-    # rebuilt from the already-collected moves: control-plane rows, no
-    # second lake scan.
-    bad_src = spark.createDataFrame(moves, affected.schema).select(
-        F.col("bad_period").alias("hiveperiod"),
-        *[F.col(f"bad_{c}").alias(c) for c in other_cols],
-    )
-    bad_parts = partition_values_set(bad_src, pcols)
+    # The bad partitions, rebuilt from the already-collected moves:
+    # control-plane rows, no second lake scan.
+    bad = spark.createDataFrame(moves, affected.schema).select(*pcols)
     periods = sorted(
-        {str(r["bad_period"]) for r in moves if r["bad_period"] is not None}
+        {str(r["hiveperiod"]) for r in moves if r["hiveperiod"] is not None}
         | {str(r["target_period"]) for r in moves}
     )
-    null_bad = any(r["bad_period"] is None for r in moves)
     in_scope = F.col("hiveperiod").isin(periods)
-    if null_bad:  # rows misfiled INTO the null partition are in scope too
+    if any(r["hiveperiod"] is None for r in moves):
+        # rows misfiled INTO the null partition are in scope too
         in_scope = in_scope | F.col("hiveperiod").isNull()
     subset = lake.filter(in_scope)
     # Rows whose accurate date can't be computed (null heartbeat) keep
     # their current partition instead of migrating to the null partition.
     fixed = subset.withColumn("hiveperiod", F.coalesce(accurate, F.col("hiveperiod")))
     # CRASH IDEMPOTENCE: a crash between the overwrite commit and the
-    # stale-dir delete below leaves a row's corrected copy in its target
+    # stale-dir delete leaves a row's corrected copy in its target
     # partition AND its stale copy in the (not-yet-deleted) bad dir; a
     # rerun reads BOTH and would bake the duplicate into the target
     # forever. Reconstruct each row group's true multiplicity as the MAX
@@ -214,105 +203,7 @@ def repair_misfiled(spark: SparkSession, root: str, tz_hours: int = 8) -> int:
             *data_cols,
             F.explode(F.sequence(F.lit(1), F.col("_n"))).alias("_i"),
         ).drop("_i")
-    out = out.persist()  # feeds bookkeeping collect + count + write
-    try:
-        out_parts = partition_values_set(out, pcols)
-        n = out.count()
-        (
-            out.repartition(*[F.col(c) for c in pcols])
-            .write.mode("overwrite")
-            # writer-level dynamic overwrite: mutating the session conf
-            # would silently change every later overwrite in the session
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "snappy")
-            .partitionBy(*pcols)
-            .parquet(root)
-        )
-    finally:
-        out.unpersist()
-    _delete_partition_dirs(spark, root, pcols, bad_parts - out_parts)
-    return n
-
-
-def table_partition_cols(spark: SparkSession, root: str) -> tuple[str, ...]:
-    """Derive a lake's hive partition columns from its directory layout
-    (walk one ``col=value`` chain from the root). Lets the maintenance
-    operators below handle both plain ``(hiveperiod, dstrct_code)`` lakes
-    and epoch-partitioned streaming targets (``write_epoch_batch`` writes
-    ``ingest_epoch=…/hiveperiod=…/dstrct_code=…``) instead of silently
-    rewriting a mixed layout (round-2 advice)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(root)
-    fs = p.getFileSystem(conf)
-    cols: list[str] = []
-    while True:
-        nxt = None
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if status.isDirectory() and "=" in name and not name.startswith("_"):
-                nxt = (name.split("=", 1)[0], status.getPath())
-                break
-        if nxt is None:
-            return tuple(cols)
-        cols.append(nxt[0])
-        p = nxt[1]
-
-
-def partition_values_set(df, pcols) -> set[tuple]:
-    """Distinct partition-value tuples of ``df`` as SPARK-cast strings
-    (None preserved): the same string Spark's writer derives the
-    directory name from — unlike Python ``str()``, which formats
-    booleans/floats/None differently and would compose paths that never
-    match the on-disk layout."""
-    return {
-        tuple(r[c] for c in pcols)
-        for r in df.select(
-            *[F.col(c).cast("string").alias(c) for c in pcols]
-        )
-        .distinct()
-        .collect()
-    }
-
-
-def _delete_partition_dirs(spark: SparkSession, root: str, pcols, parts) -> None:
-    """Remove partition directories for the given value tuples (ordered as
-    ``pcols``, values Spark-cast strings or None — see
-    ``partition_values_set``), pruning ancestors left childless, via
-    Hadoop FileSystem — storage-agnostic.
-
-    Directory names are composed with Spark's own
-    ``ExternalCatalogUtils.getPartitionPathString`` so NULL values map to
-    ``__HIVE_DEFAULT_PARTITION__`` and special characters URL-escape
-    exactly as the writer escaped them — a raw ``f"{c}={v}"`` silently
-    misses those directories and the stale partition survives."""
-    if not parts:
-        return
-    jvm = spark.sparkContext._jvm
-    cat = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_path.getFileSystem(conf)
-    # Qualified-Path equality, not string comparison: a scheme-qualified
-    # or unnormalized root ('file:///x', '/x//y') never string-matches
-    # Path.toString(), and the prune would climb past — and delete — the
-    # table root itself (then NPE at the filesystem root).
-    root_q = fs.makeQualified(root_path)
-    for values in sorted(parts, key=lambda vs: tuple(v or "" for v in vs)):
-        rel = "/".join(
-            cat.getPartitionPathString(c, v) for c, v in zip(pcols, values)
-        )
-        p = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}"))
-        fs.delete(p, True)
-        parent = p.getParent()
-        while (
-            parent is not None
-            and not parent.equals(root_q)
-            and fs.exists(parent)
-            and len(fs.listStatus(parent)) == 0
-        ):
-            fs.delete(parent, True)
-            parent = parent.getParent()
+    return replace_partitions(out, root, bad)
 
 
 def compact_partitions(spark: SparkSession, root: str, target_files: int = 1) -> None:
@@ -322,26 +213,12 @@ def compact_partitions(spark: SparkSession, root: str, target_files: int = 1) ->
     streaming targets compact under their own full layout instead of
     collapsing the epoch level into duplicated rows (round-2 advice).
 
-    Shuffle shape: repartition on (partition cols, content-hash salt
-    mod target_files) — each partition fans out to ~``target_files``
-    tasks/files while job parallelism stays #partitions × target_files.
-    (The earlier ``repartition(target_files, *pcols)`` set the TOTAL
-    task count to target_files: with the default 1, one task rewrote
-    the entire lake serially, and the per-partition file count never
-    followed the knob at all.)"""
+    Shuffle shape: ``write_lake``'s repartition on the partition columns
+    plus a content-hash salt mod ``target_files`` — each partition fans
+    out to ~``target_files`` tasks/files while job parallelism stays
+    #partitions × target_files. (The earlier ``repartition(target_files,
+    *pcols)`` set the TOTAL task count to target_files: with the default
+    1, one task rewrote the entire lake serially, and the per-partition
+    file count never followed the knob at all.)"""
     pcols = table_partition_cols(spark, root) or PARTITION_COLS
-    lake = spark.read.parquet(root)
-    salt = F.pmod(
-        F.xxhash64(F.struct(*[F.col(c) for c in lake.columns])),
-        F.lit(max(1, int(target_files))),
-    )
-    (
-        lake.withColumn("_salt", salt)
-        .repartition(*[F.col(c) for c in pcols], F.col("_salt"))
-        .drop("_salt")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "snappy")
-        .partitionBy(*pcols)
-        .parquet(root)
-    )
+    write_lake(spark.read.parquet(root), root, "overwrite", pcols, int(target_files))

@@ -158,17 +158,17 @@ DEFAULT_MAX_BUCKET = 1024
 _CC_ROWS_PER_PART = 2_000_000
 
 
+# Spark integral simpleString -> pyarrow type name: the id types the
+# one-task Arrow kernels of connected_components/k-core accept. Any other
+# id type (strings, decimals, ...) takes the distributed path instead.
+_ARROW_INT_NAMES = {"tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64"}
+
+
 def _arrow_int_type(spark_simple: str):
-    """pyarrow integer type for a Spark integral simpleString (the id
-    types connected_components/k-core accept)."""
+    """pyarrow integer type for a Spark integral simpleString."""
     import pyarrow as pa
 
-    return {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-    }[spark_simple]
+    return getattr(pa, _ARROW_INT_NAMES[spark_simple])()
 
 
 def _cc_local_kernel_factory(id_type: str):
@@ -869,11 +869,12 @@ def connected_components(
     # min-label fixpoint, same output. At 100 TB a post-LSH pair graph
     # can exceed the threshold, and then the distributed Shiloach–Vishkin
     # loop below — unchanged — is the right tool; `local_max_edges` is
-    # parameterized so tests pin both paths against each other.
+    # parameterized so tests pin both paths against each other. Ids that
+    # are not integral (strings, decimals) always take the distributed loop.
     if local_max_edges is None:
         local_max_edges = _CC_ROWS_PER_PART
-    if n_edges <= local_max_edges:
-        out_t = staged.schema["src"].dataType.simpleString()
+    out_t = staged.schema["src"].dataType.simpleString()
+    if n_edges <= local_max_edges and out_t in _ARROW_INT_NAMES:
         return staged.coalesce(1).mapInArrow(
             _cc_local_kernel_factory(out_t), f"doc {out_t}, component {out_t}"
         )

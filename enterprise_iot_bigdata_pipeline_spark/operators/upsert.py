@@ -19,6 +19,10 @@ from enterprise_iot_bigdata_pipeline_spark.operators.commitlog import (
     overwrite_atomic,
     recover_swap,
 )
+from enterprise_iot_bigdata_pipeline_spark.sources.lake import (
+    replace_partitions,
+    table_partition_cols,
+)
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str | list[str]) -> DataFrame:
@@ -80,10 +84,6 @@ def merge_into_lake(
         # layout: a subset/superset/reordering makes the dynamic
         # overwrite write a second conflicting directory tree (bricking
         # the table) or replace whole subtrees with flat files.
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            table_partition_cols,
-        )
-
         actual = table_partition_cols(spark, root)
         if actual and tuple(partition_cols) != actual:
             raise ValueError(
@@ -93,7 +93,9 @@ def merge_into_lake(
         # Affected = the updates' partitions PLUS the partitions updated
         # keys currently live in: a key whose partition value CHANGES must
         # have its old partition rewritten too, or the stale copy survives
-        # the dynamic overwrite and the key reads back twice.
+        # the dynamic overwrite and the key reads back twice (an old
+        # partition every resident key moved away from is deleted by
+        # replace_partitions).
         moved_from = target.join(
             F.broadcast(updates.select(*keys).distinct()), keys, "left_semi"
         ).select(*partition_cols)
@@ -104,45 +106,13 @@ def merge_into_lake(
         # whose partition value is NULL, so a merge touching the
         # __HIVE_DEFAULT_PARTITION__ partition would silently delete its
         # resident rows from the rewrite.
-        pcols = list(partition_cols)
         aff = affected.alias("aff")
         cond = None
-        for c in pcols:
+        for c in partition_cols:
             eq = merged[c].eqNullSafe(aff[c])
             cond = eq if cond is None else cond & eq
-        # persist: the subset plan (full-lake anti-join) feeds THREE
-        # actions below (two bookkeeping collects + the write) — without
-        # it the merge re-reads the lake three times
-        subset = merged.join(F.broadcast(aff), cond, "left_semi").persist()
-        # Partition bookkeeping BEFORE the write — afterwards these frames
-        # would re-read the just-overwritten lake (self-referential plans).
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            partition_values_set,
-        )
-
-        affected_set = partition_values_set(affected, pcols)
-        written_set = partition_values_set(subset, pcols)
-        n = subset.count()
-        (
-            subset.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            # writer-level option, NOT session conf: mutating the session
-            # would silently flip every later partitioned overwrite in
-            # the session to dynamic semantics (stale-partition survival)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(root)
-        )
-        subset.unpersist()
-        # Dynamic overwrite only replaces partitions PRESENT in the output:
-        # a source partition left with zero rows (every resident key moved
-        # away) must be deleted explicitly or its stale files survive.
-        from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-            _delete_partition_dirs,
-        )
-
-        _delete_partition_dirs(spark, root, pcols, affected_set - written_set)
-        return n
+        subset = merged.join(F.broadcast(aff), cond, "left_semi")
+        return replace_partitions(subset, root, affected)
     # Whole-table rewrite: temp-dir write + atomic rename swap. The write
     # job reads the CURRENT table (untouched until the swap), so there is
     # no read-own-output conflict and nothing is collected to the driver —

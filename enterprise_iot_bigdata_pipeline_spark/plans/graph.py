@@ -421,11 +421,16 @@ def _part_pair_edges(li: DataFrame, min_w: int) -> DataFrame:
     in one order contribute the same pair multiplicity as the join's row
     pairing (i<j index pairs over a value-sorted list ≡ unordered row
     pairs with a.p < b.p). Measured: edge checkpoint 2.9 s → ~1 s at
-    sf0.1; the fact crosses the network once instead of twice."""
+    sf0.1; the fact crosses the network once instead of twice.
+
+    NULL order keys are dropped first, as the join's ``a.o = b.o`` did:
+    grouping would otherwise pair every NULL-keyed lineitem with every
+    other one in a single (quadratic) bucket."""
     from enterprise_iot_bigdata_pipeline_spark.operators.dedup import _pairs_of_sorted
 
     return (
-        li.groupBy("o")
+        li.filter(F.col("o").isNotNull())
+        .groupBy("o")
         .agg(F.array_sort(F.collect_list("p")).alias("ps"))
         .select(F.explode(_pairs_of_sorted(F.col("ps"))).alias("q"))
         .filter(F.col("q.a") < F.col("q.b"))
@@ -521,15 +526,19 @@ def _kcore_peel(
     early-stopping when a round removes nothing. Dispatches between the
     one-task Arrow kernel (graph fits one partition — the measured-size
     convention shared with connected_components) and the distributed
-    join loop (unchanged r12 shape) above the threshold."""
-    from enterprise_iot_bigdata_pipeline_spark.operators.dedup import _CC_ROWS_PER_PART
+    join loop (unchanged r12 shape) above the threshold or for ids that
+    are not integral, which the kernel cannot type."""
+    from enterprise_iot_bigdata_pipeline_spark.operators.dedup import (
+        _ARROW_INT_NAMES,
+        _CC_ROWS_PER_PART,
+    )
 
     from pyspark.sql import Observation
 
     if local_max_edges is None:
         local_max_edges = _CC_ROWS_PER_PART
-    if n_edges <= local_max_edges:
-        out_t = e.schema["pa"].dataType.simpleString()
+    out_t = e.schema["pa"].dataType.simpleString()
+    if n_edges <= local_max_edges and out_t in _ARROW_INT_NAMES:
         return e.coalesce(1).mapInArrow(
             _kcore_peel_kernel_factory(out_t), f"pa {out_t}, pb {out_t}"
         )

@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 
 from enterprise_iot_bigdata_pipeline_spark.functions.epoch import (
     NORMALIZE_EPOCH_SQL,
-    normalize_epoch_auto,
-    to_local,
+    derive_hiveperiod,
 )
 from enterprise_iot_bigdata_pipeline_spark.functions.parity import DSUM_SQL
 from enterprise_iot_bigdata_pipeline_spark.operators.multimodal import attach_fake_media
@@ -78,9 +77,8 @@ def repair_audit_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(base_us * 1000)
         .alias("heartbeat"),
     )
-    accurate = to_local(normalize_epoch_auto(F.col("heartbeat"))).cast("date")
     return (
-        lake.withColumn("accurate", accurate)
+        lake.withColumn("accurate", derive_hiveperiod(F.col("heartbeat")))
         .filter(F.col("hiveperiod") != F.col("accurate"))
         .select(
             F.col("hiveperiod").cast("string").alias("hiveperiod"),

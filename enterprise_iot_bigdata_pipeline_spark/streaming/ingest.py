@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from enterprise_iot_bigdata_pipeline_spark.operators.compaction import enrich
-from enterprise_iot_bigdata_pipeline_spark.sources.lake import PARTITION_COLS
+from enterprise_iot_bigdata_pipeline_spark.sources.lake import PARTITION_COLS, write_lake
 
 
 def write_epoch_batch(batch_df: DataFrame, target: str, epoch_id: int) -> None:
@@ -39,14 +39,11 @@ def write_epoch_batch(batch_df: DataFrame, target: str, epoch_id: int) -> None:
     partitions stay at the second level — pruning on ``hiveperiod`` still
     works — and ``ingest_epoch`` doubles as per-row batch lineage.
     """
-    (
-        batch_df.withColumn("ingest_epoch", F.lit(int(epoch_id)))
-        .repartition(*[F.col(c) for c in PARTITION_COLS])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "snappy")
-        .partitionBy("ingest_epoch", *PARTITION_COLS)
-        .parquet(target)
+    write_lake(
+        batch_df.withColumn("ingest_epoch", F.lit(int(epoch_id))),
+        target,
+        "overwrite",
+        ("ingest_epoch", *PARTITION_COLS),
     )
 
 

@@ -281,3 +281,39 @@ def test_collapse_repeated_tokens(spark):
     assert out[3] == "x"
     assert out[4] == "y"
     assert out[5] == "the mix"
+
+
+def test_raw_schema_independent_of_call_order(spark, tmp_path):
+    """``raw_schema`` caches the discovered schema of a nanosecond-timestamp
+    parquet file; the cached entry must be the same whether it is called
+    before or after ``t`` pins the nanosAsLong reader conf."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from enterprise_iot_bigdata_pipeline_spark.plans import tables
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([1_700_000_000_000_000_000, None], pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        before_t = tables.raw_schema(spark, path)
+        tables.t(spark, str(tmp_path), "events")
+        tables._SCHEMAS.pop(path)
+        spark.conf.set(conf, "false")
+        tables.t(spark, str(tmp_path), "events")
+        after_t = tables.raw_schema(spark, path)
+    finally:
+        tables._SCHEMAS.pop(path, None)
+        spark.conf.set(conf, prev)
+    assert before_t == after_t
+    assert before_t["ts"].dataType.simpleString() == "bigint"

@@ -225,8 +225,8 @@ def test_maintenance_on_epoch_partitioned_lake(spark, tmp_path):
         audit_misfiled,
         compact_partitions,
         repair_misfiled,
-        table_partition_cols,
     )
+    from enterprise_iot_bigdata_pipeline_spark.sources.lake import table_partition_cols
 
     root = str(tmp_path / "epochlake")
     hb_mar1 = int(datetime(2024, 3, 1, 2, 0, 0, tzinfo=timezone.utc).timestamp())
@@ -453,6 +453,38 @@ def test_repair_misfiled_reaches_null_partition_rows(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "hiveperiod=__HIVE_DEFAULT_PARTITION__"))
 
 
+def test_repair_misfiled_map_column_falls_back_to_direct_rewrite(spark, tmp_path):
+    """A map-typed column cannot be grouped, so the crash-twin dedup is
+    skipped with a warning and the misfiled rows are rewritten directly:
+    one misfiled device-hour moves to its true date, nothing is lost or
+    duplicated."""
+    from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
+        audit_misfiled,
+        repair_misfiled,
+    )
+
+    root = str(tmp_path / "lake")
+    ok_hb = int(datetime(2024, 3, 1, 2, 0, 0, tzinfo=timezone.utc).timestamp())  # → Mar 1
+    bad_hour = int(datetime(2024, 3, 1, 22, 0, 0, tzinfo=timezone.utc).timestamp())  # → Mar 2
+    rows = [(ok_hb + 60 * i, "LD772", {"fw": "1.0"}) for i in range(4)]
+    rows += [(bad_hour + 600 * i, "PM1582", {"fw": "2.1", "i": str(i)}) for i in range(6)]
+    df = spark.createDataFrame(
+        rows, "heartbeat long, unitno string, attrs map<string,string>"
+    ).withColumn("dstrct_code", F.lit("D")).withColumn(
+        "hiveperiod", F.lit("2024-03-01").cast("date")  # the device-hour is misfiled
+    )
+    df.write.partitionBy("hiveperiod", "dstrct_code").parquet(root)
+    assert audit_misfiled(spark.read.parquet(root)).count() == 1
+
+    with pytest.warns(UserWarning, match="map-typed column"):
+        repair_misfiled(spark, root)
+    after = spark.read.parquet(root)
+    assert audit_misfiled(after).count() == 0
+    assert after.count() == len(rows)
+    moved = after.filter(F.col("unitno") == "PM1582").select("hiveperiod").distinct().collect()
+    assert [str(r[0]) for r in moved] == ["2024-03-02"]
+
+
 def test_compact_batch_raises_on_missing_path_and_quarantines_poison(spark, tmp_path):
     """A missing input path must RAISE (the old blanket AnalysisException
     catch silently dropped the whole batch); an all-corrupt batch without
@@ -548,9 +580,7 @@ def test_compact_partitions_fans_out_per_partition_files(spark, tmp_path):
 
     # structural: the shuffle is keyed by (pcols, salt), never a
     # fixed-width repartition that caps whole-job parallelism
-    from enterprise_iot_bigdata_pipeline_spark.operators.compaction import (
-        table_partition_cols,
-    )
+    from enterprise_iot_bigdata_pipeline_spark.sources.lake import table_partition_cols
     from pyspark.sql import functions as FF
 
     lake = spark.read.parquet(root)

@@ -276,6 +276,26 @@ def test_kcore_peel_local_kernel_matches_distributed(spark):
     assert (219, 220) in fast
 
 
+def test_graph_kernels_route_string_ids_to_distributed_path(spark):
+    """The one-task Arrow kernels only type integral ids; a small graph
+    with string ids must take the distributed path (which accepts any
+    orderable id) instead of raising in the kernel."""
+    from enterprise_iot_bigdata_pipeline_spark.operators.dedup import connected_components
+    from enterprise_iot_bigdata_pipeline_spark.plans.graph import _kcore_peel
+
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
+    )
+    got = {(r["doc"], r["component"]) for r in connected_components(pairs).collect()}
+    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+
+    # a triangle survives the K=2 peel, the pendant edge does not
+    edges = [("p1", "p2"), ("p1", "p3"), ("p2", "p3"), ("p3", "p9")]
+    e = spark.createDataFrame(edges, "pa string, pb string").localCheckpoint()
+    kept = {(r["pa"], r["pb"]) for r in _kcore_peel(spark, e, len(edges)).collect()}
+    assert kept == {("p1", "p2"), ("p1", "p3"), ("p2", "p3")}
+
+
 def test_hot_lsh_bucket_star_fallback(spark):
     """Adversarial corpus: 1000 identical docs collide into one bucket per
     band. The capped expansion must switch to star pairs (linear, no
